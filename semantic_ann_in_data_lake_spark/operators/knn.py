@@ -525,7 +525,7 @@ def _knn_exact(
         )
 
         sup = exact_l2_topk_superset(
-            queries, candidates, id_col, vec_col, k, exclude_self
+            queries, candidates, id_col, vec_col, k, exclude_self, round_dp
         )
         if sup is not None:
             scored = sup.select(

@@ -103,25 +103,28 @@ def exact_l2_topk_superset(
     vec_col: str,
     k: int,
     exclude_self: bool,
+    round_dp: int,
     qcol: str = "query_id",
     ccol: str = "cand_id",
 ) -> DataFrame | None:
     """Exact-tier kNN prefilter: emit, per query, a PROVABLE SUPERSET
-    of the (round6(d), cand_id)-ranked top-k with the bit-identical
-    unrounded d — the caller's unchanged JVM round + window then picks
-    the final rows.
+    of the (round(d, round_dp), cand_id)-ranked top-k with the
+    bit-identical unrounded d — the caller's unchanged JVM round +
+    window then picks the final rows.
 
     Replaces the |Q|·|C| crossJoin + interpreted fold of the exact
     strategy (guide §8: decide with the cheap pass, emit only
     survivors). Distances use the same sequential-lane add chain as
     the fold (module doc), so they are bit-identical; the selection
-    threshold is t_k + 1.01e-6 where t_k is the per-query k-th
-    smallest (self-excluded) distance: any candidate in the final
-    ROUNDED top-k satisfies round6(d) ≤ round6(t_k), hence
-    d < t_k + 5e-7 + 5e-7 + ulp — inside the margin. Ties at the
-    boundary only ADD rows (a superset is always safe; the JVM window
-    is the decider). Returns None when the gates decline (caller keeps
-    the crossJoin path)."""
+    threshold is t_k + 1.01·q (q = 10**-round_dp, plus a few ulps)
+    where t_k is the per-query k-th smallest (self-excluded) distance:
+    any candidate in the final ROUNDED top-k satisfies
+    round(d) ≤ round(t_k), hence d < t_k + q/2 + q/2 + ulps — inside
+    the margin. Ties at the boundary only ADD rows (a superset is
+    always safe; the JVM window is the decider). Excluded self-pairs
+    carry +inf and never survive, even when fewer than k candidates
+    remain. Returns None when the gates decline (caller keeps the
+    crossJoin path)."""
     import numpy as np
 
     if (
@@ -143,7 +146,7 @@ def exact_l2_topk_superset(
 
     spark = qframe.sparkSession
     bc = spark.sparkContext.broadcast((q[0], q[1], c[0], c[1]))
-    margin = 1.01e-6
+    quantum = 10.0 ** -round_dp
 
     qid = qframe.select(F.col(id_col).alias(qcol))
     target = spark.sparkContext.defaultParallelism
@@ -183,7 +186,10 @@ def exact_l2_topk_superset(
                         cids[None, :] == ids_blk[:, None], np.inf, acc
                     )
                 t = np.partition(sel, kth, axis=1)[:, kth]
-                keep = sel <= t[:, None] + margin
+                # relative slack: the JVM round's decimal → double step
+                # adds ulps, which outgrow 0.01·q at large round_dp
+                thr = (t + 1.01 * quantum) * (1.0 + 2.0**-48)
+                keep = (sel <= thr[:, None]) & np.isfinite(sel)
                 r, cj = np.nonzero(keep)
                 yield pd.DataFrame(
                     {

@@ -10,26 +10,33 @@ latent most-common-values field consumed by the embed prompt
 
 Scale design
 ------------
-``profile`` computes ALL per-column stats in a single global
-aggregation over one scan: for an n-column table this is ~6n partial
-aggregates that combine map-side, so the job is one scan + a tiny
-2-stage reduce — no shuffle proportional to data size, no per-column
-re-scan (the reference re-walks the pandas frame per column). The
-1-row wide result is then unpivoted driver-side into the catalog shape
-(one row per column), which is O(n_columns), not O(rows).
+Jobs and shuffles per call of the three calls the lake chain makes
+(adaptive execution runs each shuffle stage as its own job):
 
-``distinct_sample`` and ``most_common_values`` inherently need
-per-value grouping (a real shuffle); they shuffle only the projected
-column(s), pre-aggregated map-side, and bound their output (k values)
-— at 100 TB the shuffle payload is |distinct values| per column, not
-|rows|.
+- ``profile``: 2 jobs, 1 shuffle. ALL per-column stats come from a
+  single global aggregation over one scan: ~4n partial aggregates for
+  an n-column table, combined map-side, so the shuffle carries one row
+  per map partition — nothing proportional to data size, no
+  per-column re-scan (the reference re-walks the pandas frame per
+  column). One ``stack`` generator then unpivots the 1-row wide result
+  into the catalog shape (one row per column), O(n_columns).
+- ``distinct_sample``: 3 jobs, 2 shuffles, no join or broadcast. Like
+  ``most_common_values`` it needs per-value grouping (a real
+  shuffle), but shuffles only the melted (column, value) pairs,
+  pre-aggregated map-side, and bounds its output (k values) — at
+  100 TB the shuffle payload is |distinct values| per column, not
+  |rows|.
+- ``sample_rows_markdown``: 1 job, no shuffle: each partition keeps
+  its first 2n rows in (hash, row) order and the driver merges and
+  dedupes them. Only a table whose first 2n rows hold fewer than n
+  distinct rows pays a second, deduping plan (one shuffle).
 """
 
 from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 #: reference type lattice: pandas dtype → {integer,float,datetime,string}
@@ -54,6 +61,45 @@ def infer_col_type(spark_dtype: str) -> str:
     return _TYPE_MAP.get(base, "string")
 
 
+def _quoted(c: str) -> Column:
+    """Column ``c`` referenced by its literal name: CSV headers may hold
+    dots, spaces or backticks, and a bare ``F.col("a.b")`` parses as a
+    struct-field access."""
+    return F.col("`" + c.replace("`", "``") + "`")
+
+
+def _unpivot(
+    wide: DataFrame, table_name: str, names: list[str], rows: list[list[Column]]
+) -> DataFrame:
+    """Unpivot the 1-row aggregate ``wide`` into one row per entry of
+    ``rows`` (each a list of Columns in ``names`` order), prefixed by
+    ``table_name``: ONE ``stack`` generator over plain Columns, which
+    Catalyst analyses faster than the equivalent
+    ``explode(array(struct, ...))``."""
+    return wide.select(
+        F.lit(table_name).alias("table_name"),
+        F.stack(F.lit(len(rows)), *[v for row in rows for v in row]).alias(*names),
+    )
+
+
+def _length_stats(df: DataFrame, fold) -> DataFrame:
+    """The 1-row wide aggregate behind :func:`profile` and
+    :func:`profile_partial`: ``__row_count``, then per column ``i`` its
+    value count ``__{i}_n``, min/max string length ``__{i}_min`` /
+    ``__{i}_max`` and ``fold`` of the lengths ``__{i}_len``. Positional
+    aliases keep arbitrary header text out of column references."""
+    aggs = [F.count(F.lit(1)).alias("__row_count")]
+    for i, c in enumerate(df.columns):
+        s = F.length(_quoted(c).cast("string"))
+        aggs += [
+            F.count(_quoted(c)).alias(f"__{i}_n"),
+            F.min(s).alias(f"__{i}_min"),
+            F.max(s).alias(f"__{i}_max"),
+            fold(s).alias(f"__{i}_len"),
+        ]
+    return df.agg(*aggs)
+
+
 def profile(df: DataFrame, table_name: str) -> DataFrame:
     """Catalog rows ``(table_name, column_name, col_type, row_count,
     n_nulls, num_values, min_length, max_length, avg_length)`` — one row
@@ -63,37 +109,25 @@ def profile(df: DataFrame, table_name: str) -> DataFrame:
     reference (``extract_schema.py:49`` ``astype(str)``); empty columns
     default lengths to 0 (`:65-70`).
     """
-    cols = df.columns
-    aggs = [F.count(F.lit(1)).alias("__row_count")]
-    for c in cols:
-        s = F.length(F.col(c).cast("string"))
-        aggs += [
-            F.count(F.col(c)).alias(f"{c}__num_values"),
-            F.min(s).alias(f"{c}__min_length"),
-            F.max(s).alias(f"{c}__max_length"),
-            F.avg(s).alias(f"{c}__avg_length"),
-        ]
-    wide = df.agg(*aggs)
-
-    dtypes = dict(df.dtypes)
-    per_col = [
-        F.struct(
-            F.lit(c).alias("column_name"),
-            F.lit(infer_col_type(dtypes[c])).alias("col_type"),
-            F.col("__row_count").alias("row_count"),
-            (F.col("__row_count") - F.col(f"{c}__num_values")).alias("n_nulls"),
-            F.col(f"{c}__num_values").alias("num_values"),
-            F.coalesce(F.col(f"{c}__min_length"), F.lit(0)).alias("min_length"),
-            F.coalesce(F.col(f"{c}__max_length"), F.lit(0)).alias("max_length"),
-            F.coalesce(F.round(F.col(f"{c}__avg_length"), 2), F.lit(0.0)).alias(
-                "avg_length"
-            ),
-        )
-        for c in cols
-    ]
-    return (
-        wide.select(F.explode(F.array(*per_col)).alias("p"))
-        .select(F.lit(table_name).alias("table_name"), "p.*")
+    rc = F.col("__row_count")
+    return _unpivot(
+        _length_stats(df, F.avg),
+        table_name,
+        ["column_name", "col_type", "row_count", "n_nulls", "num_values",
+         "min_length", "max_length", "avg_length"],
+        [
+            [
+                F.lit(c),
+                F.lit(infer_col_type(t)),
+                rc,
+                rc - F.col(f"__{i}_n"),
+                F.col(f"__{i}_n"),
+                F.coalesce(F.col(f"__{i}_min"), F.lit(0)),
+                F.coalesce(F.col(f"__{i}_max"), F.lit(0)),
+                F.coalesce(F.round(F.col(f"__{i}_len"), 2), F.lit(0.0)),
+            ]
+            for i, (c, t) in enumerate(df.dtypes)
+        ],
     )
 
 
@@ -123,16 +157,12 @@ def melt_columns(
     """
     if not columns:
         raise ValueError("melt_columns needs at least one column")
-    pairs = F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("column_name"),
-                F.col(c).cast("string").alias("value"),
-            )
-            for c in columns
-        ]
+    m = df.select(
+        F.stack(
+            F.lit(len(columns)),
+            *[v for c in columns for v in (F.lit(c), _quoted(c).cast("string"))],
+        ).alias("column_name", "value")
     )
-    m = df.select(F.explode(pairs).alias("kv")).select("kv.column_name", "kv.value")
     return m if keep_nulls else m.where(F.col("value").isNotNull())
 
 
@@ -150,32 +180,32 @@ def distinct_sample(
     (column_name, value) distinct aggregate → per-column row_number
     window with ``rank <= k`` (Spark's WindowGroupLimit pushes the
     limit below the exchange, so only k rows per column per partition
-    survive) → one collect_list aggregate. Three shuffles TOTAL for the
-    whole table, vs 2·n_columns jobs for the per-column loop.
+    survive) → one collect_list aggregate on the window's partitioning.
+    Two shuffles TOTAL for the whole table, one job per stage.
+
+    Every column must appear, with ``[]`` when it has no values (an
+    all-null column, or a zero-row table): profile consumers enumerate
+    columns. A one-row in-plan ``Range`` adds a ``(column, NULL)`` row
+    per column to the melt; the window orders NULLs last, so it never
+    displaces a value, and ``collect_list`` skips it — no column-list
+    frame, no join.
     """
     from pyspark.sql import Window
 
-    d = melt_columns(df, columns, keep_nulls=False).distinct()
-    w = Window.partitionBy("column_name").orderBy(F.col("value").asc())
-    grouped = (
+    placeholders = df.sparkSession.range(0, 1, 1, 1).select(
+        F.stack(F.lit(len(columns)), *[F.lit(c) for c in columns]).alias(
+            "column_name"
+        ),
+        F.lit(None).cast("string").alias("value"),
+    )
+    d = melt_columns(df, columns).unionByName(placeholders).distinct()
+    w = Window.partitionBy("column_name").orderBy(F.col("value").asc_nulls_last())
+    return (
         d.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") <= k)
         .groupBy("column_name")
         .agg(F.sort_array(F.collect_list("value")).alias("values_sample"))
-    )
-    # An entirely-null column yields NO group above (nulls are melted
-    # away) but must still appear with an empty sample — profile
-    # consumers enumerate columns. Left-join against the static column
-    # list (tiny, broadcast) instead of relying on group presence.
-    cols_df = df.sparkSession.createDataFrame(
-        [(c,) for c in columns], "column_name string"
-    )
-    return cols_df.join(F.broadcast(grouped), "column_name", "left").select(
-        F.lit(table_name).alias("table_name"),
-        "column_name",
-        F.coalesce("values_sample", F.array().cast("array<string>")).alias(
-            "values_sample"
-        ),
+        .select(F.lit(table_name).alias("table_name"), "column_name", "values_sample")
     )
 
 
@@ -215,6 +245,22 @@ def most_common_values(
     )
 
 
+_NAN = object()
+
+
+def _dedup_key(v):
+    """Hashable form of a collected value that groups like Spark's
+    ``dropDuplicates``: NaN equals NaN, arrays/structs/binary compare by
+    content."""
+    if isinstance(v, float) and v != v:
+        return _NAN
+    if isinstance(v, (list, tuple)):
+        return tuple(_dedup_key(x) for x in v)
+    if isinstance(v, bytearray):
+        return bytes(v)
+    return v
+
+
 def sample_rows_markdown(df: DataFrame, n: int = 10, seed: str = "md42") -> str:
     """F16: render a deterministic sample of rows as a markdown table
     (the reference feeds this into the LLM annotation prompt,
@@ -223,23 +269,44 @@ def sample_rows_markdown(df: DataFrame, n: int = 10, seed: str = "md42") -> str:
     prompt string, not a dataset.
 
     Sampling is hash-ordered (engine-portable W5 variant) instead of
-    the reference's pandas seed-42 draw.
+    the reference's pandas seed-42 draw: the n distinct rows with the
+    smallest hash of their ``fillna('')`` rendering, ties broken by the
+    row values. Plan: ONE shuffle-free TakeOrderedAndProject job
+    ordered by (hash, *row) with limit ``2n``; duplicate rows sort
+    adjacent, so the driver dedupes that prefix. Only when duplicates
+    leave fewer than n distinct rows in it does a second plan dedupe
+    in Spark (``dropDuplicates``, one shuffle) under the same order.
     """
+    from pyspark.sql.types import StringType
+
     from semantic_ann_in_data_lake_spark.functions.hashing import portable_hash64
 
     cols = df.columns
-    key = F.concat_ws("|", *[F.col(c).cast("string") for c in cols])
-    rows = (
-        df.dropDuplicates()
-        .na.fill("")
-        .orderBy(portable_hash64(key, seed=seed))
-        .limit(n)
-        .collect()
+    # fillna('') renders string NULLs as ""; other NULLs drop out of
+    # concat_ws
+    key = F.concat_ws(
+        "|",
+        *[
+            F.coalesce(_quoted(f.name), F.lit(""))
+            if isinstance(f.dataType, StringType)
+            else _quoted(f.name).cast("string")
+            for f in df.schema.fields
+        ],
     )
+    order = [portable_hash64(key, seed=seed), *[_quoted(c) for c in cols]]
+    got = df.orderBy(*order).limit(2 * n).collect()
+    distinct = {}
+    for r in got:
+        distinct.setdefault(_dedup_key(r), r)
+    rows = list(distinct.values())[:n]
+    if len(rows) < n and len(got) == 2 * n:
+        # duplicates crowd the prefix: dedupe in the plan, so the driver
+        # never holds more than 2n rows of a duplicate-heavy table
+        rows = df.dropDuplicates().orderBy(*order).limit(n).collect()
     header = "| " + " | ".join(cols) + " |"
     sep = "| " + " | ".join("---" for _ in cols) + " |"
     body = [
-        "| " + " | ".join("" if r[c] is None else str(r[c]) for c in cols) + " |"
+        "| " + " | ".join("" if v is None else str(v) for v in r) + " |"
         for r in rows
     ]
     return "\n".join([header, sep] + body)
@@ -257,21 +324,17 @@ def profile_approx_distinct(
     HLL implementation differs — so it carries a rows-only check plus
     an accuracy test against exact counts.
     """
-    cols = df.columns
-    aggs = [
-        F.approx_count_distinct(F.col(c), rsd).alias(f"{c}__approx")
-        for c in cols
-    ]
-    wide = df.agg(*aggs)
-    per_col = [
-        F.struct(
-            F.lit(c).alias("column_name"),
-            F.col(f"{c}__approx").alias("approx_n_distinct"),
-        )
-        for c in cols
-    ]
-    return wide.select(F.explode(F.array(*per_col)).alias("p")).select(
-        F.lit(table_name).alias("table_name"), "p.*"
+    wide = df.agg(
+        *[
+            F.approx_count_distinct(_quoted(c), rsd).alias(f"__{i}_approx")
+            for i, c in enumerate(df.columns)
+        ]
+    )
+    return _unpivot(
+        wide,
+        table_name,
+        ["column_name", "approx_n_distinct"],
+        [[F.lit(c), F.col(f"__{i}_approx")] for i, c in enumerate(df.columns)],
     )
 
 
@@ -454,33 +517,23 @@ def profile_partial(df: DataFrame, table_name: str) -> DataFrame:
     carry NULL min/max and 0 len_sum (finalization coalesces exactly
     like :func:`profile`).
     """
-    cols = df.columns
-    aggs = [F.count(F.lit(1)).alias("__row_count")]
-    for c in cols:
-        s = F.length(F.col(c).cast("string"))
-        aggs += [
-            F.count(F.col(c)).alias(f"{c}__num_values"),
-            F.min(s).alias(f"{c}__min_length"),
-            F.max(s).alias(f"{c}__max_length"),
-            F.sum(s.cast("long")).alias(f"{c}__len_sum"),
-        ]
-    wide = df.agg(*aggs)
-    dtypes = dict(df.dtypes)
-    per_col = [
-        F.struct(
-            F.lit(c).alias("column_name"),
-            F.lit(infer_col_type(dtypes[c])).alias("col_type"),
-            F.col("__row_count").alias("row_count"),
-            F.col(f"{c}__num_values").alias("num_values"),
-            F.col(f"{c}__min_length").alias("min_length"),
-            F.col(f"{c}__max_length").alias("max_length"),
-            F.coalesce(F.col(f"{c}__len_sum"), F.lit(0)).alias("len_sum"),
-        )
-        for c in cols
-    ]
-    return (
-        wide.select(F.explode(F.array(*per_col)).alias("p"))
-        .select(F.lit(table_name).alias("table_name"), "p.*")
+    return _unpivot(
+        _length_stats(df, lambda s: F.sum(s.cast("long"))),
+        table_name,
+        ["column_name", "col_type", "row_count", "num_values", "min_length",
+         "max_length", "len_sum"],
+        [
+            [
+                F.lit(c),
+                F.lit(infer_col_type(t)),
+                F.col("__row_count"),
+                F.col(f"__{i}_n"),
+                F.col(f"__{i}_min"),
+                F.col(f"__{i}_max"),
+                F.coalesce(F.col(f"__{i}_len"), F.lit(0)),
+            ]
+            for i, (c, t) in enumerate(df.dtypes)
+        ],
     )
 
 

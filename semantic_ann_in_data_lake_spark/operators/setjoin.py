@@ -32,8 +32,6 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -313,12 +311,6 @@ def _bitmask_exact_jaccard(toks: DataFrame, threshold: float):
         "id_b",
         F.round(F.col("__inter") / F.col("__union"), 6).alias("jaccard"),
     )
-
-
-def required_overlap(size_a: int, size_b: int, threshold: float) -> int:
-    """⌈τ/(1+τ)·(|A|+|B|)⌉ — the overlap bound behind the filter
-    (exposed for tests)."""
-    return math.ceil(threshold / (1.0 + threshold) * (size_a + size_b))
 
 
 def containment_prefix_join(

@@ -6003,3 +6003,52 @@ def test_exact_knn_superset_kernel_bit_identical(spark, sf_dir, monkeypatch):
         )
     )
     assert got == want
+
+
+def _exact_knn_both_tiers(df, monkeypatch, **kw):
+    """(kernel rows, declarative rows) of one exact knn_join call."""
+    from semantic_ann_in_data_lake_spark.operators.knn import knn_join
+
+    def run():
+        return sorted(
+            map(tuple, knn_join(df, df, strategy="exact", **kw).collect())
+        )
+
+    got = run()
+    monkeypatch.setenv("SPARK_GRAFT_PAIRSCORE_KERNEL", "0")
+    want = run()
+    monkeypatch.delenv("SPARK_GRAFT_PAIRSCORE_KERNEL")
+    return got, want
+
+
+def test_exact_knn_superset_kernel_k_above_n_drops_self_pairs(
+    spark, monkeypatch
+):
+    """k=5 over 4 vectors with exclude_self: the kernel's +inf self
+    slot IS the k-th key, so an unguarded ``key <= kth + margin`` kept
+    every self-pair (16 rows, each self at rank 1, distance 0)."""
+    df = spark.createDataFrame(
+        [(i, [float(i), 0.5 * i]) for i in range(4)],
+        "vec_id bigint, embedding array<double>",
+    )
+    got, want = _exact_knn_both_tiers(df, monkeypatch, k=5)
+    assert len(got) == 12
+    assert all(q != c for q, c, _, _ in got)
+    assert got == want
+
+
+@pytest.mark.parametrize("round_dp", [0, 1, 2, 4, 6, 8])
+def test_exact_knn_superset_kernel_round_dp(spark, monkeypatch, round_dp):
+    """Near-tie distances a few rounding quanta apart: the kernel's
+    superset margin follows ``round_dp`` (a fixed 6-dp margin dropped
+    rows the (rounded distance, cand_id) window keeps at round_dp < 6)."""
+    import numpy as np
+
+    rng = np.random.default_rng(round_dp)
+    scale = (0.5 * 10.0**-round_dp) ** 0.5
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in rng.normal(size=4) * scale]) for i in range(40)],
+        "vec_id bigint, embedding array<double>",
+    )
+    got, want = _exact_knn_both_tiers(df, monkeypatch, k=3, round_dp=round_dp)
+    assert got == want
